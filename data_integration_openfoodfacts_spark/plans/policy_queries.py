@@ -51,7 +51,7 @@ def q198_semdedup_fixed_cluster(
     with k as a scalar subquery over the same embeddings table — the
     gate therefore pins the POLICY (both engines derive k from the
     data), not a frozen constant. Scaling evidence:
-    SCALING_LLM.json round12 (tools/bench_scaling_r12.py)."""
+    SCALING_LLM.json round12."""
     from ..operators.clustering import fit_centroids_lloyd
     from ..operators.similarity import semantic_dedup, semdedup_k
 

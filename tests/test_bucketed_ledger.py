@@ -1,7 +1,6 @@
 """The shared bucketed-ledger layout helper (round-9 VERDICT #4 +
 round-8 ADVICE): sidecar-recorded bucket counts, loud refusal of
-mismatched appends, probe-side self-derivation, and the novelty
-stream's in-stream compaction cadence (round-9 VERDICT #1)."""
+mismatched appends, probe-side self-derivation and compaction."""
 
 from __future__ import annotations
 
@@ -189,75 +188,3 @@ def test_corpus_probe_uses_store_layout(spark, tmp_path):
     got = spark.read.parquet(target)
     assert got.count() == 2  # no re-admitted duplicates
     assert read_meta(spark, target)["n_buckets"] == 8
-
-
-def test_novelty_stream_compaction_cadence(spark, tmp_path):
-    """Round-9 VERDICT #1 (mirrors the near-dup stream's test):
-    run_novelty_stream(compact_files_every=2) over a 4-tranche drain
-    leaves the ledger at one file per bucket, with results and ledger
-    contents IDENTICAL to an uncompacted run."""
-    from data_integration_openfoodfacts_spark.streaming.novelty_ingest import (
-        run_novelty_stream,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    batches = [
-        [(1, "a b c d e f g h i j"), (2, "k l m n o p q r s t")],
-        [(3, "a b c d e f g h i j extra"), (4, "u v w x y z aa bb cc")],
-        [(5, "fresh words one two three four five six seven eight")],
-        [(6, "final tranche tokens alpha beta gamma delta epsilon zeta")],
-    ]
-    for i, rows in enumerate(batches):
-        stage = str(tmp_path / f"_st{i}")
-        (
-            _docs(spark, rows)
-            .select(
-                "doc_id", "text", F.lit("en").alias("lang"),
-                F.lit("s").alias("source"),
-                F.length("text").cast("long").alias("n_chars"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        os.rename(f"{stage}/{part}", f"{src}/b{i}.parquet")
-
-    l1, r1, k1 = (str(tmp_path / p) for p in ("led1", "res1", "ck1"))
-    run_novelty_stream(spark, src, l1, r1, k1, compact_files_every=2)
-    l2, r2, k2 = (str(tmp_path / p) for p in ("led2", "res2", "ck2"))
-    run_novelty_stream(spark, src, l2, r2, k2)
-
-    res1 = {
-        tuple(r)
-        for r in spark.read.parquet(r1)
-        .select("batch_id", "n_docs", "n_shingles", "n_novel")
-        .collect()
-    }
-    res2 = {
-        tuple(r)
-        for r in spark.read.parquet(r2)
-        .select("batch_id", "n_docs", "n_shingles", "n_novel")
-        .collect()
-    }
-    assert res1 == res2
-    led1 = {
-        tuple(r)
-        for r in spark.read.parquet(l1)
-        .select("shingle_md5", "first_doc")
-        .collect()
-    }
-    led2 = {
-        tuple(r)
-        for r in spark.read.parquet(l2)
-        .select("shingle_md5", "first_doc")
-        .collect()
-    }
-    assert led1 == led2
-    # compacted: one file per bucket dir (batch 3's append lands after
-    # the last compaction at trigger 4 — an availableNow drain of 4
-    # batches compacts at triggers 2 and 4, so the final state IS
-    # compacted)
-    for d in glob.glob(f"{l1}/{KB_COL}=*"):
-        assert len(glob.glob(f"{d}/*.parquet")) == 1, d

@@ -69,3 +69,17 @@ def test_parenthesized_multiline_import_resolves(tmp_path):
         assert "operators/graph.py" in files
     finally:
         mod.unlink()
+
+
+def test_every_package_module_is_reached_by_a_query_or_the_cli():
+    # a module that neither the query registry nor the CLI imports is
+    # reached only by its own tests: no query fingerprints it, no
+    # pipeline or bench path runs it
+    reached = set(module_closure(PKG_ROOT / "plans" / "registry.py"))
+    reached |= set(module_closure(PKG_ROOT / "cli.py"))
+    orphans = sorted(
+        str(p.relative_to(PKG_ROOT))
+        for p in PKG_ROOT.rglob("*.py")
+        if p.name != "__init__.py" and p not in reached
+    )
+    assert orphans == []

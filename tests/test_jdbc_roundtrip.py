@@ -1,12 +1,13 @@
-"""Environment-gated integration tests for the reference's ACTUAL sink
+"""Tests for the sink surfaces (sources/sinks.py): Parquet compaction,
+plus environment-gated integration tests for the reference's ACTUAL sink
 surfaces (round-7 VERDICT #5): the JDBC round-trip
 (pipeline_etl.ipynb:469-474, 570-571 — the reference writes its
 silver/gold tables to MySQL and reads them back) and the
 Delta/Iceberg transactional-table formats the streaming writers
 document as their swap-in point.
 
-This sandbox has no reachable database server and no lakehouse jars,
-so these SKIP with a visible reason — the moment an environment
+Without a reachable database server or lakehouse jars, the JDBC and
+table-format tests SKIP with a visible reason — the moment an environment
 provides `SPARK_GRAFT_JDBC_URL` (e.g.
 `jdbc:mysql://host:3306/db?user=u&password=p`) or the jars, the paths
 are exercised for real with zero code change.
@@ -15,10 +16,13 @@ are exercised for real with zero code change.
 from __future__ import annotations
 
 import os
+import pathlib
 
 import pytest
 
 from pyspark.sql import functions as F
+
+from data_integration_openfoodfacts_spark.sources.sinks import compact_parquet
 
 JDBC_URL = os.environ.get("SPARK_GRAFT_JDBC_URL")
 
@@ -80,3 +84,15 @@ def test_transactional_format_write_if_jars_present(spark, tmp_path, fmt):
     path = str(tmp_path / f"tbl_{fmt}")
     df.write.format(fmt).save(path)
     assert spark.read.format(fmt).load(path).count() == 10
+
+
+def test_compact_parquet_reduces_files(spark, tmp_path):
+    target = str(tmp_path / "frag")
+    ev = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    ev.repartition(17).write.parquet(target)
+    before = len(list(pathlib.Path(target).rglob("*.parquet")))
+    assert before >= 17
+    n = compact_parquet(spark, target, target_file_mb=256)
+    after = len(list(pathlib.Path(target).rglob("*.parquet")))
+    assert after == n == 1
+    assert spark.read.parquet(target).count() == ev.count()

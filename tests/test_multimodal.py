@@ -139,6 +139,20 @@ def test_binary_simhash_neardup_vs_disjoint(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_binary_simhash_rejects_more_than_63_bits(spark):
+    """The bit-width precondition raises (an assert would vanish under
+    ``python -O``): 64 vote bits overflow the BIGINT fingerprint."""
+    from data_integration_openfoodfacts_spark.multimodal.binary_ops import (
+        binary_simhash,
+    )
+
+    df = spark.createDataFrame(
+        [(1, b"abcdefgh")], "media_id long, payload binary"
+    )
+    with pytest.raises(ValueError, match="bits=64"):
+        binary_simhash(df, "media_id", "payload", bits=64)
+
+
 def test_binary_simhash_single_vote_aggregation(spark):
     """Round-14 optimization pin: gram dedup + the ±1 bit votes happen
     in ONE Arrow `mapInPandas` pass emitting a single partial-vote row

@@ -1,7 +1,6 @@
 """Incremental shingle-novelty ledger (operators/novelty.py,
-plans/hygiene_queries.q159, streaming/novelty_ingest.py) — round-6
-VERDICT #1. The reconciliation contract: tranche-incremental totals
-equal batch q157 exactly; the streaming twin equals the batch twin."""
+plans/hygiene_queries.q159) — round-6 VERDICT #1. The reconciliation
+contract: tranche-incremental totals equal batch q157 exactly."""
 
 from __future__ import annotations
 
@@ -57,152 +56,6 @@ def test_q159_reconciles_with_batch_q157(spark):
     }
     assert incr == batch
     assert len(incr) > 0
-
-
-def test_streaming_ledger_equals_batch(spark, tmp_path):
-    """availableNow drain over doc_id-decile tranche files == batch
-    q157 totals per tranche; the persisted ledger has unique keys."""
-    from data_integration_openfoodfacts_spark.plans.curation_queries import (
-        q157_novelty_curve,
-    )
-    from data_integration_openfoodfacts_spark.sources.parquet_source import (
-        load_table,
-    )
-    from data_integration_openfoodfacts_spark.streaming.novelty_ingest import (
-        run_novelty_stream,
-    )
-
-    docs = load_table(spark, SF, "documents").select(
-        "doc_id", "text", "lang", "source",
-        F.length("text").cast("long").alias("n_chars"),
-    )
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    import os
-
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    # one flat FILE per tranche (the established availableNow staging
-    # pattern from test_neardup_ingest) — lexical name order matches
-    # tranche order so batches arrive doc_id-ascending
-    for t in range(10):
-        stage = f"{src}/_stage{t}"
-        (
-            docs.filter(F.floor(F.col("doc_id") * 10 / (hi + 1)) == t)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        os.rename(f"{stage}/{part}", f"{src}/tranche_{t}.parquet")
-    ledger_path = str(tmp_path / "ledger")
-    results_path = str(tmp_path / "results")
-    run_novelty_stream(
-        spark, str(src), ledger_path, results_path,
-        str(tmp_path / "ckpt"),
-    )
-    got = {
-        (r["batch_id"], r["n_docs"], r["n_shingles"], r["n_novel"])
-        for r in spark.read.parquet(results_path).collect()
-    }
-    want = {
-        (r["tranche"], r["n_docs"], r["n_shingles"], r["n_novel"])
-        for r in q157_novelty_curve(spark, SF).collect()
-    }
-    assert got == want
-    ledger = spark.read.parquet(ledger_path)
-    assert ledger.count() == ledger.select("shingle_md5").distinct().count()
-
-
-def test_replayed_batch_is_idempotent(spark, tmp_path):
-    """Direct foreachBatch replay: same batch_id scored twice — the
-    totals row survives from the first attempt and the ledger gains no
-    duplicate keys."""
-    from data_integration_openfoodfacts_spark.streaming.novelty_ingest import (
-        novelty_score_batch,
-    )
-
-    batch = _docs(
-        spark, [(1, "a b c d e f g h i j"), (2, "k l m n o p q r s")]
-    ).select(
-        "doc_id", "text",
-        F.lit("en").alias("lang"), F.lit("s").alias("source"),
-        F.length("text").cast("long").alias("n_chars"),
-    )
-    ledger_path = str(tmp_path / "ledger")
-    results_path = str(tmp_path / "results")
-    novelty_score_batch(batch, ledger_path, results_path, batch_id=0)
-    first_ledger = sorted(
-        tuple(r) for r in spark.read.parquet(ledger_path).collect()
-    )
-    first_results = sorted(
-        tuple(r) for r in spark.read.parquet(results_path).collect()
-    )
-    novelty_score_batch(batch, ledger_path, results_path, batch_id=0)
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(ledger_path).collect()
-    ) == first_ledger
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(results_path).collect()
-    ) == first_results
-
-
-def test_stream_restart_continues_ledger(spark, tmp_path):
-    """Two availableNow drains against the SAME checkpoint: the first
-    processes tranches 0-4, new files 5-9 arrive, the restarted stream
-    processes ONLY them against the persisted ledger — and the final
-    totals still equal the batch curve (a real stop/start, not just a
-    per-function replay)."""
-    import os
-
-    from data_integration_openfoodfacts_spark.plans.curation_queries import (
-        q157_novelty_curve,
-    )
-    from data_integration_openfoodfacts_spark.sources.parquet_source import (
-        load_table,
-    )
-    from data_integration_openfoodfacts_spark.streaming.novelty_ingest import (
-        run_novelty_stream,
-    )
-
-    docs = load_table(spark, SF, "documents").select(
-        "doc_id", "text", "lang", "source",
-        F.length("text").cast("long").alias("n_chars"),
-    )
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-
-    def stage(t):
-        d = f"{src}/_stage{t}"
-        (
-            docs.filter(F.floor(F.col("doc_id") * 10 / (hi + 1)) == t)
-            .coalesce(1).write.mode("overwrite").parquet(d)
-        )
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        os.rename(f"{d}/{part}", f"{src}/tranche_{t}.parquet")
-
-    ledger_path = str(tmp_path / "ledger")
-    results_path = str(tmp_path / "results")
-    ckpt = str(tmp_path / "ckpt")
-    for t in range(5):
-        stage(t)
-    run_novelty_stream(spark, src, ledger_path, results_path, ckpt)
-    n_first = spark.read.parquet(results_path).count()
-    assert n_first == 5
-    for t in range(5, 10):
-        stage(t)
-    run_novelty_stream(spark, src, ledger_path, results_path, ckpt)
-    got = {
-        (r["batch_id"], r["n_docs"], r["n_shingles"], r["n_novel"])
-        for r in spark.read.parquet(results_path).collect()
-    }
-    want = {
-        (r["tranche"], r["n_docs"], r["n_shingles"], r["n_novel"])
-        for r in q157_novelty_curve(spark, SF).collect()
-    }
-    assert got == want
 
 
 def test_partitioned_ledger_equals_in_memory_scorer(spark, tmp_path):

@@ -13,7 +13,10 @@ from pyspark.sql import functions as F
 from data_integration_openfoodfacts_spark.functions.text_normalize import (
     normalized_text_chain,
 )
-from data_integration_openfoodfacts_spark.operators.dedup import dedup_keep_latest
+from data_integration_openfoodfacts_spark.operators.dedup import (
+    dedup_keep_latest,
+    dedup_keep_latest_salted,
+)
 from data_integration_openfoodfacts_spark.operators.skew import (
     attach_grouped_agg,
     salted_broadcast_left,
@@ -42,6 +45,17 @@ def test_salted_broadcast_left_equals_plain_join(spark):
     plain = li.join(part, "l_partkey").count()
     salted = salted_broadcast_left(li, part, "l_partkey").count()
     assert plain == salted
+
+
+def test_salted_dedup_equals_plain(spark):
+    ev = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    order = [F.col("l_shipdate").desc(), F.col("l_linenumber").desc()]
+    plain = dedup_keep_latest(ev, ["l_orderkey"], order)
+    salted = dedup_keep_latest_salted(ev, ["l_orderkey"], order, n_salts=8)
+    cols = sorted(ev.columns)
+    a = sorted(map(tuple, plain.select(*cols).collect()))
+    b = sorted(map(tuple, salted.select(*cols).collect()))
+    assert a == b
 
 
 def test_attach_grouped_agg_equals_window(spark):
