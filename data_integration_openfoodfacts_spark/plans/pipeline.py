@@ -7,9 +7,12 @@ in SURVEY.md §3.1) with the architectural fixes §4 calls for:
   cells (keeps Catalyst analysis cheap and codegen spans wide);
 - accent folding via an Arrow-batched pandas UDF, not a row-at-a-time
   Python UDF (pipeline_etl.ipynb:205-210 — its biggest perf sink);
-- Silver is cached before the Gold fan-out: the reference recomputes
-  the full CSV->Silver chain for every one of ~9 downstream actions
-  (SURVEY.md §4 "Caching / reuse");
+- Silver is computed once for the Gold fan-out, where the reference
+  recomputes the full CSV->Silver chain for every one of ~9 downstream
+  actions (SURVEY.md §4 "Caching / reuse"). Persisted runs write the
+  Silver table first and build Gold from the written table (a Silver
+  too large to cache is written anyway), then write the six Gold
+  tables concurrently; in-memory runs cache Silver instead;
 - surrogate keys minted in-engine (row_number over natural keys) —
   no MySQL AUTO_INCREMENT write->read-back round-trip
   (pipeline_etl.ipynb:570-571,644);
@@ -34,6 +37,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,7 +51,9 @@ from ..operators.cleaning import (
 from ..operators.dedup import dedup_keep_latest
 from ..operators.keys import add_surrogate_key
 from ..operators.validation import NUTRIENT_BOUNDS, bounded_expr
+from ..overlap import run_independent
 from ..schemas import NUTRIENT_COLUMNS, SILVER_INPUT_COLUMNS
+from ..sources.sinks import write_table
 
 # Imputation config — defaults (including misspellings) kept verbatim
 # from pipeline_etl.ipynb:268-302 for output parity.
@@ -333,44 +339,6 @@ def build_gold(
     }
 
 
-def _save_table(
-    spark: SparkSession,
-    df: DataFrame,
-    table: str,
-    partition_by: list[str] | None = None,
-    bucket_by: tuple[int, list[str]] | None = None,
-) -> None:
-    """Overwrite ``table``, tolerating a leftover location from a
-    previous session: the default in-memory catalog forgets tables on
-    restart while their warehouse directories persist, and saveAsTable
-    then refuses the location. Registering first via DROP + path cleanup
-    keeps re-runs idempotent."""
-
-    def write() -> None:
-        w = df.write.mode("overwrite").format("parquet")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        if bucket_by:
-            n, cols = bucket_by
-            w = w.bucketBy(n, *cols).sortBy(*cols)
-        w.saveAsTable(table)
-
-    try:
-        write()
-    except Exception as e:  # noqa: BLE001
-        if "LOCATION_ALREADY_EXISTS" not in str(e):
-            raise
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        db, _, name = table.partition(".")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        path = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{db}.db/{name}")
-        fs = path.getFileSystem(jsc.hadoopConfiguration())
-        fs.delete(path, True)
-        write()
-
-
 @dataclass
 class PipelineResult:
     metrics: dict = field(default_factory=dict)
@@ -411,7 +379,17 @@ def run_pipeline(
     t0 = time.time()
     rows_in = bronze.count()
 
-    silver = build_silver(bronze).cache()
+    silver = build_silver(bronze)
+    if database:
+        # Written from its uncached plan, so AQE coalesces the keep-
+        # latest window's output into a few files; Gold then reads the
+        # written table back, pruned to the columns each table needs.
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}_silver")
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}_gold")
+        write_table(silver, f"{database}_silver.products")
+        silver = spark.table(f"{database}_silver.products")
+    else:
+        silver = silver.cache()
     rows_out = silver.count()
 
     gold = build_gold(silver, sk_strategy=sk_strategy)
@@ -433,9 +411,7 @@ def run_pipeline(
                 )
 
     if database:
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}_silver")
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}_gold")
-        _save_table(spark, silver, f"{database}_silver.products")
+        sinks = []
         for name, df in gold.items():
             # At 100 TB the fact is partitioned by snapshot year so the
             # weekly/seasonal analytics (Q6-style) prune whole years of
@@ -453,7 +429,14 @@ def run_pipeline(
                 "dim_product",
             ):
                 bucket = (bucket_fact_buckets, ["product_sk"])
-            _save_table(spark, df, f"{database}_gold.{name}", part_cols, bucket)
+            sinks.append(
+                partial(
+                    write_table, df, f"{database}_gold.{name}",
+                    partition_by=part_cols, bucket_by=bucket,
+                )
+            )
+        # each sink writes its own table: independent jobs, overlapped
+        run_independent(spark, sinks)
         if analyze_tables:
             # Feed the cost-based optimizer (join reordering, broadcast
             # decisions from real sizes — SURVEY §4 "Join reordering").

@@ -24,14 +24,39 @@ def write_table(
     """Parquet managed-table sink. ``partition_by`` enables partition
     pruning (e.g. fact by year); ``bucket_by`` pre-shuffles on the join
     key so later joins/aggs on that key skip their exchange entirely —
-    the 100 TB co-located-join tool."""
-    w = df.write.mode(mode).format("parquet")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if bucket_by:
-        n, cols = bucket_by
-        w = w.bucketBy(n, *cols).sortBy(*cols)
-    w.saveAsTable(table)
+    the 100 TB co-located-join tool.
+
+    An overwrite tolerates a leftover location from a previous session:
+    the default in-memory catalog forgets tables on restart while their
+    warehouse directories persist, and saveAsTable then refuses the
+    location. Dropping the table and its directory, then writing again,
+    keeps re-runs idempotent."""
+
+    def write() -> None:
+        w = df.write.mode(mode).format("parquet")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        if bucket_by:
+            n, cols = bucket_by
+            w = w.bucketBy(n, *cols).sortBy(*cols)
+        w.saveAsTable(table)
+
+    try:
+        write()
+    except Exception as e:  # noqa: BLE001
+        if mode != "overwrite" or "LOCATION_ALREADY_EXISTS" not in str(e):
+            raise
+        spark = df.sparkSession
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        db, _, name = table.rpartition(".")
+        warehouse = spark.conf.get("spark.sql.warehouse.dir")
+        jvm = spark.sparkContext._jvm
+        jsc = spark.sparkContext._jsc
+        path = jvm.org.apache.hadoop.fs.Path(
+            f"{warehouse}/{db}.db/{name}" if db else f"{warehouse}/{name}"
+        )
+        path.getFileSystem(jsc.hadoopConfiguration()).delete(path, True)
+        write()
 
 
 def write_metrics_json(metrics: dict[str, Any], out_dir: str) -> str:

@@ -56,11 +56,13 @@ which is why time travel lives here.
 
 from __future__ import annotations
 
+from functools import partial
+from itertools import takewhile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localframe import local_rows_df
-
 from ..operators.bloom import (
     bloom_probe_keys,
     counting_build,
@@ -71,6 +73,7 @@ from ..operators.bucketed_ledger import (
     read_json_sidecar,
     write_json_sidecar,
 )
+from ..overlap import run_independent
 from .events_stream import (
     overwrite_parquet_atomically,
     read_parquet_if_exists,
@@ -211,15 +214,14 @@ def append_counting_deltas(
     path: str,
     n_words: int = DEFAULT_WORDS,
     k: int = DEFAULT_K,
-    max_workers: int = 3,
 ) -> dict[str, bool]:
     """Append SEVERAL delta partitions in one store transaction:
     ``items`` is an ORDERED list of ``(delta_id, keys_df, sign)``. The
     per-delta parquet writes target independent ``delta_id=``
-    directories, so they overlap in a small driver thread pool (the
-    guide's overlap-independent-jobs recipe — each delta-build job's
-    straggler tail back-fills with the next delta's tasks instead of
-    idling the local cluster); the sidecar is then written ONCE,
+    directories, so they overlap through `overlap.run_independent`
+    (each delta-build job's straggler tail back-fills with the next
+    delta's tasks instead of idling the local cluster); the sidecar is
+    then written ONCE,
     appending the ids to the log in the CALLER's list order, so the
     applied log — and therefore every `read_counts_as_of` version cut
     — is exactly what the equivalent sequence of
@@ -229,9 +231,9 @@ def append_counting_deltas(
 
     Contracts preserved, not weakened:
 
-    - single WRITER per store: the one caller coordinates; the pool is
-      its internal fan-out, and the sidecar read-modify-write happens
-      exactly once, outside the pool;
+    - single WRITER per store: the one caller coordinates; the
+      overlapped writes are its internal fan-out, and the sidecar
+      read-modify-write happens exactly once, after them;
     - per-delta idempotence: absorbed ids (compaction tombstone) and
       completed directories (_SUCCESS) are refused exactly as in
       `write_counting_delta`, torn directories are deleted and
@@ -239,14 +241,16 @@ def append_counting_deltas(
       (the same crash window: this function widens it to several
       deltas, and the SAME replay heal covers all of them);
     - all-or-nothing is NOT promised (it never was across separate
-      calls either): a crash mid-pool leaves some directories complete
-      and unlogged — a replay of the same ordered batch heals them in
-      list order and writes the rest.
+      calls either). When a delta write fails, the log gains the
+      deltas that landed, in list order, up to the first that did not;
+      then the error is re-raised. Deltas past that point may be left
+      complete and unlogged (or torn, when the failure cancelled
+      them) — a replay of the same ordered batch heals them in list
+      order and writes the rest. A process crash mid-write leaves the
+      same states, minus the log update.
 
     Returns ``{delta_id: wrote_anything}`` (False = refused replay).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     ids = [d for d, _df, _s in items]
     if len(set(ids)) != len(ids):
         raise CountingLayoutError(
@@ -278,26 +282,28 @@ def append_counting_deltas(
         loggable.append(delta_id)
         pending.append((delta_id, keys, sign))
 
-    def _write_one(item: tuple[str, DataFrame, int]) -> None:
-        delta_id, keys, sign = item
+    done: set[str] = set()
+
+    def _write_one(delta_id: str, keys: DataFrame, sign: int) -> None:
         delta = counting_build(keys, key, n_words, k)
         if sign < 0:
             delta = delta.select("p", (-F.col("cnt")).alias("cnt"))
         ddir = f"{path.rstrip('/')}/delta_id={delta_id}"
         delta.coalesce(1).write.mode("errorifexists").parquet(ddir)
+        done.add(delta_id)
 
-    if pending:
-        with ThreadPoolExecutor(
-            max_workers=min(max_workers, len(pending))
-        ) as pool:
-            futures = [pool.submit(_write_one, it) for it in pending]
-        for f in futures:
-            f.result()  # re-raise the first failure
-        for delta_id, _keys, _sign in pending:
-            applied[delta_id] = True
-    new_log = log + [d for d in loggable if d not in log]
-    if new_log != log:
-        _write_meta(spark, path, n_words, k, absorbed, new_log)
+    pending_ids = {d for d, _keys, _sign in pending}
+    try:
+        run_independent(spark, [partial(_write_one, *it) for it in pending])
+    finally:
+        # log in the caller's order up to the first delta that did not
+        # land; on success that is every loggable id
+        landed = takewhile(lambda d: d not in pending_ids or d in done, loggable)
+        new_log = log + [d for d in landed if d not in log]
+        if new_log != log:
+            _write_meta(spark, path, n_words, k, absorbed, new_log)
+    for delta_id, _keys, _sign in pending:
+        applied[delta_id] = True
     return applied
 
 

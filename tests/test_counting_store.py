@@ -7,6 +7,7 @@ real availableNow drain."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -290,3 +291,48 @@ def test_batched_append_heals_unlogged_directory(spark, tmp_path):
     assert replay == {"d0": False, "d1": False}
     assert store_versions(spark, p)["log"] == ["d0", "d1"]
     assert _counts(spark, p) == before
+
+
+def test_batched_append_failure_logs_completed_prefix(spark, tmp_path, monkeypatch):
+    """Fault injection at the second of three delta writes: the log
+    gains exactly the delta before the failure (caller order, stopping
+    at the first failure), the error surfaces, and replaying the same
+    batch heals the store to a clean run's counts and log."""
+    from data_integration_openfoodfacts_spark.streaming import counting_store
+    from data_integration_openfoodfacts_spark.streaming.counting_store import (  # noqa: E501
+        append_counting_deltas,
+        store_versions,
+    )
+
+    items = [
+        ("d0", _keys(spark, ["a1", "a2"]), 1),
+        ("d1", _keys(spark, ["b1"]), 1),
+        ("t0", _keys(spark, ["a2"]), -1),
+    ]
+    clean = str(tmp_path / "clean")
+    append_counting_deltas(spark, items, "k", clean, NW, K)
+
+    p = str(tmp_path / "store")
+    real_build = counting_store.counting_build
+
+    def build(keys, *args, **kwargs):
+        if keys is items[1][1]:
+            # fail only once d0 has landed, so the prefix is fixed
+            deadline = time.time() + 60
+            while not os.path.exists(f"{p}/delta_id=d0/_SUCCESS"):
+                if time.time() > deadline:
+                    raise TimeoutError("d0 never landed")
+                time.sleep(0.05)
+            raise RuntimeError("injected delta failure")
+        return real_build(keys, *args, **kwargs)
+
+    monkeypatch.setattr(counting_store, "counting_build", build)
+    with pytest.raises(RuntimeError, match="injected delta failure"):
+        append_counting_deltas(spark, items, "k", p, NW, K)
+    assert store_versions(spark, p)["log"] == ["d0"]
+
+    monkeypatch.setattr(counting_store, "counting_build", real_build)
+    replay = append_counting_deltas(spark, items, "k", p, NW, K)
+    assert replay["d0"] is False and replay["d1"] is True
+    assert store_versions(spark, p)["log"] == ["d0", "d1", "t0"]
+    assert _counts(spark, p) == _counts(spark, clean)

@@ -45,12 +45,16 @@ ROWS = [
 
 
 @pytest.fixture(scope="module")
-def result(spark, tmp_path_factory):
+def tsv(tmp_path_factory):
     path = os.path.join(str(tmp_path_factory.mktemp("off")), "products.tsv")
     with open(path, "w", encoding="utf-8") as f:
         f.write(HEADER + "\n" + "\n".join(ROWS) + "\n")
-    bronze = read_openfoodfacts_csv(spark, path)
-    return run_pipeline(spark, bronze)
+    return path
+
+
+@pytest.fixture(scope="module")
+def result(spark, tsv):
+    return run_pipeline(spark, read_openfoodfacts_csv(spark, tsv))
 
 
 def test_row_accounting(result):
@@ -134,6 +138,28 @@ def test_metrics_shape(result):
     }
     assert m["sugar_anomalies"] == 0
     assert 0 <= m["avg_completeness"] <= 1
+
+
+def test_persisted_run_equals_in_memory(spark, tsv, result):
+    """A persisted run builds Gold from the written Silver table and
+    writes the Gold tables concurrently; an in-memory run builds Gold
+    from a cached Silver. Both must give the same tables and metrics,
+    and the Silver table, written from its uncached plan, must come out
+    in fewer files than the keep-latest window's shuffle partitions."""
+    persisted = run_pipeline(
+        spark, read_openfoodfacts_csv(spark, tsv), database="pipeline_eq"
+    )
+    assert set(persisted.tables) == set(result.tables)
+    for name, mem in result.tables.items():
+        disk = persisted.tables[name]
+        assert disk.dtypes == mem.dtypes, name
+        assert disk.count() == mem.count(), name
+        assert disk.exceptAll(mem).count() == 0, name
+        assert mem.exceptAll(disk).count() == 0, name
+    drop = lambda m: {k: v for k, v in m.items() if k != "duration_sec"}  # noqa: E731
+    assert drop(persisted.metrics) == drop(result.metrics)
+    files = spark.table("pipeline_eq_silver.products").inputFiles()
+    assert len(files) < int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def _executed_plan(df):
